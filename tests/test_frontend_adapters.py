@@ -9,6 +9,8 @@ exercised end-to-end.
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 import pytest
 
@@ -121,3 +123,101 @@ def test_xarray_facade_gated(spark, grids):
     rg = Regridder(spark, g_in, g_out, "bilinear")
     with pytest.raises(ImportError, match="xarray"):
         rg.regrid_dataarray(object())
+
+
+def _bincount_apply(rg, X):
+    # independent reference: one np.bincount per slice over the
+    # collected COO triplets (no CSR sort, no segment-sum)
+    t = rg.weights.select("row", "col", "S").toPandas()
+    row, col, s = t["row"].to_numpy(), t["col"].to_numpy(), t["S"].to_numpy()
+    X = X.reshape(-1, rg.n_in)
+    return np.stack([np.bincount(row, weights=s * x[col], minlength=rg.n_out) for x in X])
+
+
+@pytest.fixture(scope="module")
+def bilinear(spark, grids):
+    g_in, g_out = grids
+    return Regridder(spark, g_in, g_out, "bilinear")
+
+
+@pytest.mark.parametrize("k", [1, 3, "dp+1", 16])
+def test_regrid_numpy_matches_bincount(spark, bilinear, k):
+    if k == "dp+1":
+        k = spark.sparkContext.defaultParallelism + 1
+    X = np.random.default_rng(k).standard_normal((k,) + bilinear.grid_in.shape)
+    out = bilinear.regrid_numpy(X)
+    assert out.shape == (k,) + bilinear.grid_out.shape
+    np.testing.assert_allclose(
+        out.reshape(k, -1), _bincount_apply(bilinear, X), rtol=1e-12, atol=0
+    )
+
+
+def test_regrid_numpy_locstream_source(spark, grids):
+    from xesmf_spark.grids import locstream
+
+    pts = locstream(spark, [-120.0, -40.0, 10.0, 75.0, 160.0], [-60.0, 10.0, 45.0, -20.0, 70.0])
+    rg = Regridder(spark, pts, grids[1], "nearest_s2d")
+    X = np.random.default_rng(7).standard_normal((2, 3, 5))  # (..., n_locations)
+    out = rg.regrid_numpy(X)
+    assert out.shape == (2, 3) + grids[1].shape
+    np.testing.assert_allclose(out.reshape(6, -1), _bincount_apply(rg, X), rtol=1e-12, atol=0)
+
+
+def test_regrid_numpy_nan_propagates_unmapped_stay_zero(spark, bilinear):
+    t = bilinear.weights.select("row", "col").toPandas()
+    row, col = t["row"].to_numpy(), t["col"].to_numpy()
+    unmapped = np.setdiff1d(np.arange(bilinear.n_out), row)
+    assert len(unmapped)  # the non-periodic seam leaves cells unmapped
+    X = np.random.default_rng(1).standard_normal((2, bilinear.n_in)) + 3.0
+    X[0, col[0]] = np.nan
+    out = bilinear.regrid_numpy(X.reshape((2,) + bilinear.grid_in.shape)).reshape(2, -1)
+    hit = np.unique(row[col == col[0]])
+    assert np.isnan(out[0, hit]).all()
+    assert np.isfinite(np.delete(out[0], hit)).all() and np.isfinite(out[1]).all()
+    assert (out[:, unmapped] == 0.0).all()
+    np.testing.assert_allclose(out, _bincount_apply(bilinear, X), rtol=1e-12, atol=0)
+
+
+@pytest.fixture(params=["default", "0"], ids=["local-relation", "arrow-rdd"])
+def arrow_relation_threshold(request, spark):
+    # createDataFrame from Arrow makes a local relation below this size
+    # and one partition per record batch above it; "0" forces the latter
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    if request.param == "default":
+        yield
+        return
+    spark.conf.set(key, request.param)
+    try:
+        yield
+    finally:
+        spark.conf.unset(key)
+
+
+def test_regrid_numpy_one_job_no_exchange(spark, bilinear, arrow_relation_threshold):
+    from xesmf_spark.vectorized import _ndarray_frame
+
+    sc = spark.sparkContext
+    parts = min(16, sc.defaultParallelism)
+    assert parts > 1
+    X = np.random.default_rng(2).standard_normal((16,) + bilinear.grid_in.shape)
+    bilinear.regrid_numpy(X[:1])  # caches the CSR broadcast
+    group = f"regrid-numpy-plan-{uuid.uuid4().hex}"  # fresh per run: the tracker keeps old groups
+    sc.setJobGroup(group, group)
+    try:
+        out = bilinear.regrid_numpy(X)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1, jobs
+    stages = sc.statusTracker().getJobInfo(jobs[0]).stageIds
+    assert len(stages) == 1, stages
+    # spread over min(k, defaultParallelism) tasks, one per partition
+    assert sc.statusTracker().getStageInfo(stages[0]).numTasks == parts
+    np.testing.assert_allclose(
+        out.reshape(16, -1), _bincount_apply(bilinear, X), rtol=1e-12, atol=0
+    )
+
+    frame = _ndarray_frame(spark, X.reshape(16, -1), bilinear.weights, bilinear.n_in, bilinear.n_out)
+    assert frame.rdd.getNumPartitions() == parts
+    assert "Exchange" not in frame._jdf.queryExecution().executedPlan().toString()

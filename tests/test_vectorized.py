@@ -105,3 +105,23 @@ def test_smm_apply_files_discard_sink(spark, tmp_path):
             spark, in_dir, w, out_dir, n_in=g_in.n_cells, n_out=g_out.n_cells,
             extra_cols=("time",), sink="s3",
         )
+
+
+def test_binary_slices_roundtrip(monkeypatch):
+    import numpy as np
+    import pyarrow as pa
+    import pytest
+
+    from xesmf_spark import vectorized
+
+    M = np.arange(24.0).reshape(6, 4)
+    monkeypatch.setattr(vectorized, "_BINARY_MAX_BYTES", 2 * 4 * 8)  # two rows per array
+    parts = vectorized._matrix_to_binary(M)
+    assert [len(p) for p in parts] == [2, 2, 2]
+    whole = pa.concat_arrays(parts)
+    for col in (whole, whole.cast(pa.large_binary())):
+        np.testing.assert_array_equal(vectorized._binary_to_matrix(col, 4), M)
+        np.testing.assert_array_equal(vectorized._binary_to_matrix(col.slice(1, 3), 4), M[1:4])
+    assert vectorized._binary_to_matrix(whole.slice(0, 0), 4).shape == (0, 4)
+    with pytest.raises(ValueError):
+        vectorized._binary_to_matrix(whole, 3)

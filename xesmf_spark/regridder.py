@@ -433,14 +433,15 @@ class Regridder:
         reshape semantics, unmapped destination cells -> 0).
 
         Execution is DISTRIBUTED, not a driver-side scipy call: the
-        extra dims flatten to one wide Arrow row per horizontal slice
-        and run through ``smm_apply_vectorized`` (broadcast-CSR SpMV in
-        Arrow-batched ``mapInArrow``), so a (time, lev, y, x) stack
-        regrids at cluster width; only the final gather is driver-side,
-        which is fair — the caller asked for an ndarray back."""
+        extra dims flatten to one slice per horizontal field and run
+        through ``smm_apply_ndarray`` (broadcast-CSR SpMV in
+        ``mapInArrow``, slices shipped as raw float64 bytes), so a
+        (time, lev, y, x) stack regrids at cluster width; only the final
+        gather is driver-side, which is fair — the caller asked for an
+        ndarray back."""
         import numpy as np
 
-        from xesmf_spark.vectorized import smm_apply_vectorized
+        from xesmf_spark.vectorized import smm_apply_ndarray
 
         indata = np.asarray(indata, dtype=np.float64)
         if self.locstream_in:
@@ -451,24 +452,9 @@ class Regridder:
                 f"must match the source grid shape {self.grid_in.shape}"
             )
         extra_shape = indata.shape[:-2]
-        X = indata.reshape(-1, self.n_in)
-        k = X.shape[0]
-
-        import pandas as pd
-
-        wide = self.spark.createDataFrame(
-            pd.DataFrame({"slice_idx": np.arange(k, dtype=np.int64), "values": list(X)}),
-            schema="slice_idx long, values array<double>",
+        Y = smm_apply_ndarray(
+            self.spark, indata.reshape(-1, self.n_in), self.weights, self.n_in, self.n_out
         )
-        if k > 1:
-            wide = wide.repartition(
-                min(k, self.spark.sparkContext.defaultParallelism)
-            )
-        out = smm_apply_vectorized(
-            wide, self.weights, self.n_in, self.n_out, extra_cols=["slice_idx"]
-        )
-        pdf = out.toPandas().sort_values("slice_idx")
-        Y = np.stack(pdf["values"].to_numpy())
         return Y.reshape(extra_shape + self.grid_out.shape)
 
     def _dest_lonlat(self):

@@ -3,7 +3,7 @@
 The relational join-agg (apply.py) is exact and scales to arbitrary
 field sizes, but for dense many-field workloads the reference's
 one-matmul-per-chunk design (scipy COO dot, xesmf/smm.py:90; dask
-map_blocks, xesmf/frontend.py:375-389) is the faster shape. Two Spark
+map_blocks, xesmf/frontend.py:375-389) is the faster shape. Three Spark
 physical strategies implement it:
 
 1. ``smm_apply_vectorized`` — fields as WIDE rows ``(extra dims...,
@@ -12,7 +12,19 @@ physical strategies implement it:
    JVM<->Python Arrow boundary (measured ~0.5-1 GB/s aggregate on
    list columns — fine for interactive use, not the 100-TB path).
 
-2. ``smm_apply_files`` — the dense-tensor FAST path: the field lives in
+2. ``smm_apply_ndarray`` — the path for a driver-side ndarray stack
+   (``Regridder.regrid_numpy``). Each slice is one ``binary`` value
+   holding its raw float64 bytes, so the JVM moves each slice as one
+   opaque byte copy where an ``array<double>`` row is converted element
+   by element (Arrow -> rows -> Arrow, once each way). The kernel reads
+   the contiguous binary data buffer zero-copy as a ``(b, n_in)``
+   matrix and emits raw bytes back; the driver collects with
+   ``toArrow`` and rebuilds Y with ``np.frombuffer``. The source table
+   is cut into ``min(k, defaultParallelism)`` record batches, which
+   ``createDataFrame`` turns into as many partitions whatever the
+   stack's size, so a call is one job with no shuffle.
+
+3. ``smm_apply_files`` — the dense-tensor FAST path: the field lives in
    parquet (where a 100-TB field lives anyway), Spark schedules
    row-group SPLITS, and each task reads its split natively with
    pyarrow, applies the kernel, and writes its output part file
@@ -113,7 +125,8 @@ def _list_to_matrix(vcol: pa.Array, n_in: int) -> np.ndarray:
     """Arrow list<double> column -> (b, n_in) float64 matrix, zero-copy
     from the list child buffer (avoids pyarrow's per-element fallback)."""
     if isinstance(vcol, pa.ChunkedArray):
-        vcol = vcol.combine_chunks()
+        # combine_chunks copies even a single chunk
+        vcol = vcol.chunk(0) if vcol.num_chunks == 1 else vcol.combine_chunks()
     b = len(vcol)
     flat = vcol.flatten()  # logical value range of the list array
     X = flat.to_numpy(zero_copy_only=False)  # primitive double -> buffer view
@@ -129,6 +142,46 @@ def _matrix_to_list(Y: np.ndarray) -> pa.ListArray:
     b, n_out = Y.shape
     offsets = pa.array(np.arange(0, (b + 1) * n_out, n_out, dtype=np.int32))
     return pa.ListArray.from_arrays(offsets, pa.array(np.ascontiguousarray(Y).reshape(-1)))
+
+
+def _binary_to_matrix(col: pa.Array, n: int) -> np.ndarray:
+    """Arrow binary column whose values are raw float64 rows of length
+    ``n`` -> (b, n) float64 matrix, zero-copy over the data buffer (the
+    values of a binary array are contiguous)."""
+    b = len(col)
+    if b == 0:
+        return np.empty((0, n))
+    if col.null_count:
+        raise ValueError("field slices must not be null")
+    off_type = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    _, off_buf, data = col.buffers()
+    offs = np.frombuffer(off_buf, off_type, b + 1, col.offset * off_type().itemsize)
+    if np.any(np.diff(offs) != 8 * n):
+        raise ValueError(f"field slices must each hold n={n} float64 values")
+    return np.frombuffer(data, np.float64, b * n, int(offs[0])).reshape(b, n)
+
+
+#: largest value range an Arrow binary array (int32 offsets) can hold
+_BINARY_MAX_BYTES = 2**31 - 1
+
+
+def _matrix_to_binary(M: np.ndarray) -> list[pa.BinaryArray]:
+    """(b, n) float64 matrix -> binary arrays, one value of raw float64
+    bytes per row, zero-copy over ``M``'s memory. Rows are split across
+    as many arrays as keep each under the int32 offset limit."""
+    M = np.ascontiguousarray(M, dtype=np.float64)
+    b, n = M.shape
+    step = max(1, _BINARY_MAX_BYTES // max(8 * n, 1))
+    out = []
+    for s in range(0, b, step):
+        part = M[s : s + step]
+        offs = np.arange(0, (len(part) + 1) * 8 * n, 8 * n, dtype=np.int32)
+        out.append(
+            pa.Array.from_buffers(
+                pa.binary(), len(part), [None, pa.py_buffer(offs), pa.py_buffer(part)]
+            )
+        )
+    return out
 
 
 #: Worker-process scratch buffers, REUSED across tasks (workers are
@@ -213,6 +266,75 @@ def smm_apply_vectorized(
             )
 
     return field_wide.mapInArrow(kernel, out_schema)
+
+
+def _ndarray_frame(
+    spark: SparkSession, X: np.ndarray, weights: DataFrame, n_in: int, n_out: int
+) -> DataFrame:
+    """The lazy plan behind :func:`smm_apply_ndarray`: a DataFrame of
+    ``(slice_idx long, y binary)`` rows, ``y`` holding the raw float64
+    bytes of ``A @ X[slice_idx]``.
+
+    The source table is built from ``min(k, defaultParallelism)``
+    record batches of near-equal row counts. ``createDataFrame`` takes
+    one of two JVM paths depending on the table's size: below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default) it makes a local relation, which is scanned in
+    ``min(k, defaultParallelism)`` partitions; above it, it makes one
+    partition per record batch. Cutting the batches here gives the same
+    partitions on both paths, with no repartition shuffle. A batch is
+    split further only past ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    rows or the 2 GiB binary offset limit."""
+    bc = _csr_broadcast(spark, weights, n_in, n_out)
+    parts = min(len(X), spark.sparkContext.defaultParallelism)
+    cuts = [len(X) * i // parts for i in range(parts + 1)]
+    schema = pa.schema([("slice_idx", pa.int64()), ("x", pa.binary())])
+    batches = []
+    for lo, hi in zip(cuts[:-1], cuts[1:]):
+        s = lo
+        for x in _matrix_to_binary(X[lo:hi]):
+            idx = pa.array(np.arange(s, s + len(x), dtype=np.int64))
+            batches.append(pa.RecordBatch.from_arrays([idx, x], schema=schema))
+            s += len(x)
+    src = spark.createDataFrame(
+        pa.Table.from_batches(batches, schema), schema="slice_idx long, x binary"
+    )
+
+    def kernel(batches):
+        for rb in batches:
+            Y = _spmv_batch(_binary_to_matrix(rb.column(1), n_in), bc.value, n_out)
+            s = 0
+            for y in _matrix_to_binary(Y):
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column(0).slice(s, len(y)), y], ["slice_idx", "y"]
+                )
+                s += len(y)
+
+    return src.mapInArrow(kernel, "slice_idx long, y binary")
+
+
+def smm_apply_ndarray(
+    spark: SparkSession, X: np.ndarray, weights: DataFrame, n_in: int, n_out: int
+) -> np.ndarray:
+    """Apply COO weights to a driver-side ``(k, n_in)`` stack and return
+    the ``(k, n_out)`` result, ``Y[i] = A.dot(X[i])`` (unmapped rows 0).
+
+    The k slices run as k rows of the source DataFrame in
+    ``min(k, defaultParallelism)`` partitions, one task each, with no
+    shuffle (see :func:`_ndarray_frame`)."""
+    X = np.ascontiguousarray(X, dtype=np.float64)
+    if X.ndim != 2 or X.shape[1] != n_in:
+        raise ValueError(f"expected a (k, {n_in}) array, got shape {X.shape}")
+    k = X.shape[0]
+    Y = np.zeros((k, n_out))
+    if k == 0:
+        return Y
+    out = _ndarray_frame(spark, X, weights, n_in, n_out).toArrow()
+    if out.num_rows != k:
+        raise RuntimeError(f"{out.num_rows} slices came back for {k} sent")
+    for rb in out.to_batches():
+        Y[rb.column(0).to_numpy()] = _binary_to_matrix(rb.column(1), n_out)
+    return Y
 
 
 def smm_apply_files(
