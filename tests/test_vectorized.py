@@ -1,91 +1,85 @@
-"""Differential test: vectorized mapInPandas path ≡ relational join-agg
-path — the engine's analogue of the reference's scipy≡ESMPy exactness
-test (xesmf/tests/test_backend.py:142-157). Sum order differs between
-the two physical plans, so equality is to 1e-9 abs rather than bitwise.
+"""Differential test: the parquet-native ``smm_apply_files`` path ≡ the
+relational join-agg path — the engine's analogue of the reference's
+scipy≡ESMPy exactness test (xesmf/tests/test_backend.py:142-157). Sum
+order differs between the two physical plans, so equality is to 1e-9
+abs rather than bitwise.
 """
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
+import xesmf_spark.vectorized as V
 from xesmf_spark import grid_global, smm_apply, wave_smooth
-from xesmf_spark.vectorized import long_to_wide, smm_apply_vectorized, wide_to_long
+from xesmf_spark.vectorized import smm_apply_files, smm_apply_ndarray, write_wide_parquet
 from xesmf_spark.weights import conservative_weights
 
 
-def test_vectorized_matches_relational(spark):
+@pytest.mark.parametrize("part_naming", ["unique", "task"])
+def test_files_matches_relational(spark, tmp_path, part_naming):
     g_in = grid_global(spark, 20, 12)
     g_out = grid_global(spark, 15, 9)
     w = conservative_weights(g_in, g_out)
+    n_times = 10
 
-    times = spark.range(1, 4).select(F.col("id").alias("time"))
-    field = (
-        g_in.df.select("cell_id", wave_smooth().alias("v0"))
-        .crossJoin(times)
-        .select("time", "cell_id", (F.col("time").cast("double") * F.col("v0")).alias("value"))
+    base = g_in.df.select("cell_id", wave_smooth().alias("v0"))
+    times = spark.range(1, n_times + 1).select(F.col("id").alias("time"))
+    field = base.crossJoin(times).select(
+        "time", "cell_id", (F.col("time").cast("double") * F.col("v0")).alias("value")
+    )
+    rel = np.zeros((n_times, g_out.n_cells))
+    for r in smm_apply(field, w, g_out, extra_keys=("time",), attach_coords=False).collect():
+        rel[r.time - 1, r.cell_id] = r.value
+
+    v0 = np.zeros(g_in.n_cells)
+    for r in base.collect():
+        v0[r.cell_id] = r.v0
+    # several files, one row per row group: more splits than tasks, so
+    # tasks fuse splits (some across files) into one kernel call
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    write_wide_parquet(
+        [(t,) for t in range(1, n_times + 1)], in_dir, g_in.n_cells,
+        lambda e: e[0] * v0, extra_names=("time",), files=3, rows_per_group=1,
     )
 
-    rel = smm_apply(field, w, g_out, extra_keys=("time",), attach_coords=False)
+    def run():
+        out = smm_apply_files(
+            spark, in_dir, w, out_dir, n_in=g_in.n_cells, n_out=g_out.n_cells,
+            extra_cols=("time",), part_naming=part_naming,
+        )
+        assert len(V.LAST_MANIFEST) < n_times
+        assert sum(r.rows for r in V.LAST_MANIFEST) == n_times
+        return out.select("time", "values").collect()
 
-    wide = long_to_wide(field, extra_keys=("time",))
-    vec_wide = smm_apply_vectorized(
-        wide, w, n_in=g_in.n_cells, n_out=g_out.n_cells, extra_cols=("time",)
-    )
-    vec = wide_to_long(vec_wide, extra_keys=("time",))
-
-    diff = (
-        rel.join(vec.withColumnRenamed("value", "v_vec"), ["time", "cell_id"])
-        .select(F.max(F.abs(F.col("value") - F.col("v_vec"))).alias("d"))
-        .first()["d"]
-    )
-    assert rel.count() == vec.count() == 3 * g_out.n_cells
-    assert diff < 1e-9, diff
-
-
-def test_wide_roundtrip(spark):
-    g = grid_global(spark, 20, 12)
-    field = g.df.select("cell_id", wave_smooth().alias("value")).withColumn(
-        "time", F.lit(1)
-    )
-    wide = long_to_wide(field, extra_keys=("time",))
-    assert wide.count() == 1
-    back = wide_to_long(wide, extra_keys=("time",))
-    assert back.count() == g.n_cells
-    chk = (
-        back.join(field.withColumnRenamed("value", "v0"), ["time", "cell_id"])
-        .select(F.max(F.abs(F.col("value") - F.col("v0"))).alias("d"))
-        .first()["d"]
-    )
-    assert chk == 0.0
+    rows = run()
+    if part_naming == "task":
+        rows = run()  # the re-run overwrites its parts in place
+    assert sorted(r.time for r in rows) == list(range(1, n_times + 1))
+    vec = np.zeros_like(rel)
+    for r in rows:
+        vec[r.time - 1] = r["values"]
+    assert np.abs(rel).max() > 0
+    assert np.abs(rel - vec).max() < 1e-9
 
 
 def test_vectorized_shape_check(spark):
-    import pytest
-
     g_in = grid_global(spark, 20, 12)
     g_out = grid_global(spark, 15, 9)
     w = conservative_weights(g_in, g_out)
-    wide = long_to_wide(
-        g_in.df.select("cell_id", wave_smooth().alias("value")).withColumn("time", F.lit(1)),
-        extra_keys=("time",),
-    )
     with pytest.raises(ValueError):
-        smm_apply_vectorized(wide, w, n_in=10, n_out=5, extra_cols=("time",))
+        smm_apply_ndarray(spark, np.zeros((2, 10)), w, n_in=10, n_out=5)
 
 
 def test_smm_apply_files_discard_sink(spark, tmp_path):
     """sink='discard' must run the full scan+kernel (manifest populated,
     write_ms 0, no output files) and return None; results parity is
-    covered by the parquet-sink differential above."""
+    covered by test_files_matches_relational above."""
     import os
-
-    import xesmf_spark.vectorized as V
-    from xesmf_spark.vectorized import smm_apply_files, write_wide_parquet
 
     g_in = grid_global(spark, 20, 12)
     g_out = grid_global(spark, 15, 9)
     w = conservative_weights(g_in, g_out)
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    import numpy as np
-
     write_wide_parquet(
         [(t,) for t in range(1, 4)], in_dir, g_in.n_cells,
         lambda e: np.full(g_in.n_cells, float(e[0])), extra_names=("time",), files=2,
@@ -98,9 +92,7 @@ def test_smm_apply_files_discard_sink(spark, tmp_path):
     assert sum(r.rows for r in V.LAST_MANIFEST) == 3
     assert all(r.write_ms == 0 and r.part == "<discarded>" for r in V.LAST_MANIFEST)
     assert not [f for f in os.listdir(out_dir) if f.endswith(".parquet")]
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         smm_apply_files(
             spark, in_dir, w, out_dir, n_in=g_in.n_cells, n_out=g_out.n_cells,
             extra_cols=("time",), sink="s3",
@@ -108,9 +100,7 @@ def test_smm_apply_files_discard_sink(spark, tmp_path):
 
 
 def test_binary_slices_roundtrip(monkeypatch):
-    import numpy as np
     import pyarrow as pa
-    import pytest
 
     from xesmf_spark import vectorized
 

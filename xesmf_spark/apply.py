@@ -53,7 +53,6 @@ def smm_apply(
     dest_grid: Grid | DataFrame,
     extra_keys: Sequence[str] = (),
     value_cols: Sequence[str] = ("value",),
-    cell_col: str = "cell_id",
     broadcast_weights: bool = True,
     attach_coords: bool = True,
     extra_combos: DataFrame | None = None,
@@ -62,7 +61,7 @@ def smm_apply(
 
     Parameters
     ----------
-    field : DataFrame with columns ``[*extra_keys, cell_col, *value_cols]``
+    field : DataFrame with columns ``[*extra_keys, cell_id, *value_cols]``
         (the long-format N-D array; extra dims = leading dims of the
         reference's field, xesmf/frontend.py:321-331).
     weights : DataFrame ``(row BIGINT, col BIGINT, S DOUBLE)`` — COO triplets.
@@ -101,7 +100,7 @@ def smm_apply(
         F.sum(F.col("S") * F.col(v)).alias(f"__agg_{v}") for v in value_cols
     ]
     applied = (
-        field.join(w, field[cell_col] == w["col"], "inner")
+        field.join(w, field["cell_id"] == w["col"], "inner")
         .groupBy(*extra, "row")
         .agg(*aggs)
     )

@@ -1,18 +1,13 @@
 """Vectorized physical strategies for weight application (SURVEY.md §4.3).
 
-The relational join-agg (apply.py) is exact and scales to arbitrary
-field sizes, but for dense many-field workloads the reference's
+The relational join-agg (``apply.smm_apply``) is exact, scales to
+arbitrary field sizes, and is the route for a field held as a long
+DataFrame. For dense many-field workloads the reference's
 one-matmul-per-chunk design (scipy COO dot, xesmf/smm.py:90; dask
-map_blocks, xesmf/frontend.py:375-389) is the faster shape. Three Spark
-physical strategies implement it:
+map_blocks, xesmf/frontend.py:375-389) is the faster shape. Two Spark
+physical strategies implement it, one per input shape:
 
-1. ``smm_apply_vectorized`` — fields as WIDE rows ``(extra dims...,
-   values: array<double>)`` processed by ``mapInArrow`` with the sparse
-   weight triplets broadcast to every executor. Data transits the
-   JVM<->Python Arrow boundary (measured ~0.5-1 GB/s aggregate on
-   list columns — fine for interactive use, not the 100-TB path).
-
-2. ``smm_apply_ndarray`` — the path for a driver-side ndarray stack
+1. ``smm_apply_ndarray`` — the path for a driver-side ndarray stack
    (``Regridder.regrid_numpy``). Each slice is one ``binary`` value
    holding its raw float64 bytes, so the JVM moves each slice as one
    opaque byte copy where an ``array<double>`` row is converted element
@@ -24,7 +19,7 @@ physical strategies implement it:
    ``createDataFrame`` turns into as many partitions whatever the
    stack's size, so a call is one job with no shuffle.
 
-3. ``smm_apply_files`` — the dense-tensor FAST path: the field lives in
+2. ``smm_apply_files`` — the dense-tensor FAST path: the field lives in
    parquet (where a 100-TB field lives anyway), Spark schedules
    row-group SPLITS, and each task reads its split natively with
    pyarrow, applies the kernel, and writes its output part file
@@ -69,15 +64,6 @@ def _init_worker_allocator() -> None:
 
 _init_worker_allocator()
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 
 #: (weights DataFrame, n_in, n_out) -> broadcast CSR, cached for the
@@ -121,12 +107,11 @@ def _collect_csr(weights: DataFrame, n_in: int, n_out: int):
     return uniq_rows, seg_starts, cols, vals
 
 
-def _list_to_matrix(vcol: pa.Array, n_in: int) -> np.ndarray:
+def _list_to_matrix(vcol: pa.ChunkedArray, n_in: int) -> np.ndarray:
     """Arrow list<double> column -> (b, n_in) float64 matrix, zero-copy
     from the list child buffer (avoids pyarrow's per-element fallback)."""
-    if isinstance(vcol, pa.ChunkedArray):
-        # combine_chunks copies even a single chunk
-        vcol = vcol.chunk(0) if vcol.num_chunks == 1 else vcol.combine_chunks()
+    # combine_chunks copies even a single chunk
+    vcol = vcol.chunk(0) if vcol.num_chunks == 1 else vcol.combine_chunks()
     b = len(vcol)
     flat = vcol.flatten()  # logical value range of the list array
     X = flat.to_numpy(zero_copy_only=False)  # primitive double -> buffer view
@@ -236,38 +221,6 @@ def _spmv_batch(X: np.ndarray, csr, n_out: int) -> np.ndarray:
     return Y
 
 
-def smm_apply_vectorized(
-    field_wide: DataFrame,
-    weights: DataFrame,
-    n_in: int,
-    n_out: int,
-    extra_cols: Sequence[str] = (),
-    value_col: str = "values",
-) -> DataFrame:
-    """Apply COO weights to a wide field: one output array row per input
-    row, ``out = A.dot(x)`` per slice (xesmf/smm.py:90 semantics,
-    including unmapped-row -> 0 since Y starts as zeros)."""
-    spark = field_wide.sparkSession
-    bc = _csr_broadcast(spark, weights, n_in, n_out)
-
-    extra_cols = list(extra_cols)
-    out_fields = [field_wide.schema[c] for c in extra_cols]
-    out_fields.append(StructField(value_col, ArrayType(DoubleType()), False))
-    out_schema = StructType(out_fields)
-
-    def kernel(batches):
-        for rb in batches:
-            vcol = rb.column(rb.schema.get_field_index(value_col))
-            X = _list_to_matrix(vcol, n_in)
-            Y = _spmv_batch(X, bc.value, n_out)
-            arrays = [rb.column(rb.schema.get_field_index(e)) for e in extra_cols]
-            yield pa.RecordBatch.from_arrays(
-                arrays + [_matrix_to_list(Y)], extra_cols + [value_col]
-            )
-
-    return field_wide.mapInArrow(kernel, out_schema)
-
-
 def _ndarray_frame(
     spark: SparkSession, X: np.ndarray, weights: DataFrame, n_in: int, n_out: int
 ) -> DataFrame:
@@ -346,13 +299,13 @@ def smm_apply_files(
     n_out: int,
     extra_cols: Sequence[str] = ("time", "lev"),
     value_col: str = "values",
-    tasks: int | None = None,
     part_naming: str = "unique",
     sink: str = "parquet",
 ) -> DataFrame | None:
     """Parquet-to-parquet distributed SpMV — the dense-field scale path.
 
-    Spark schedules (file, row-group) splits; each task reads its splits
+    Spark schedules (file, row-group) splits over
+    ``min(splits, defaultParallelism)`` tasks; each task reads its splits
     natively with pyarrow (no JVM transit of field bytes), runs the
     transposed-gather kernel once over all its rows, and writes one
     output part file. Returns the output as a DataFrame
@@ -390,8 +343,7 @@ def smm_apply_files(
             splits.append((p, rg))
     if not splits:
         raise FileNotFoundError(f"no parquet files under {input_path}")
-    if tasks is None:
-        tasks = min(len(splits), spark.sparkContext.defaultParallelism)
+    tasks = min(len(splits), spark.sparkContext.defaultParallelism)
     os.makedirs(output_path, exist_ok=True)
     run_id = uuid.uuid4().hex[:8]
 
@@ -405,15 +357,6 @@ def smm_apply_files(
     cuts = [len(splits) * i // tasks for i in range(tasks + 1)]
     assign = {i: splits[cuts[i] : cuts[i + 1]] for i in range(tasks)}
     sdf = spark.range(0, tasks, 1, tasks)
-    manifest_schema = StructType(
-        [
-            StructField("part", StringType()),
-            StructField("rows", LongType()),
-            StructField("read_ms", LongType()),
-            StructField("kernel_ms", LongType()),
-            StructField("write_ms", LongType()),
-        ]
-    )
 
     def task(batches):
         # one task = possibly several splits; fuse them into ONE kernel
@@ -448,51 +391,38 @@ def smm_apply_files(
             schema=out_schema,
         )
         if sink == "discard":
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(["<discarded>"]),
-                    pa.array([len(ot)], pa.int64()),
-                    pa.array([int((t1 - t0) * 1000)], pa.int64()),
-                    pa.array([int((t2 - t1) * 1000)], pa.int64()),
-                    pa.array([0], pa.int64()),
-                ],
-                ["part", "rows", "read_ms", "kernel_ms", "write_ms"],
-            )
-            return
-        if part_naming == "task":
-            part = os.path.join(output_path, f"part-{min(tids):04d}.parquet")
+            part, t3 = "<discarded>", t2
         else:
-            part = os.path.join(
-                output_path, f"part-{run_id}-{os.getpid()}-{uuid.uuid4().hex[:6]}.parquet"
+            if part_naming == "task":
+                name = f"part-{min(tids):04d}"
+            else:
+                name = f"part-{run_id}-{os.getpid()}-{uuid.uuid4().hex[:6]}"
+            part = os.path.join(output_path, name + ".parquet")
+            # lz4 + byte-stream-split on the float payload: ~1.6x fewer
+            # bytes for ~15 ms/task of (parallel) CPU. The sink is
+            # disk-writeback-bound under sustained load (~600 MB/s device
+            # behind a multi-GB/s page cache), so fewer dirty bytes is
+            # wall-clock, not just space — and the right default for any
+            # production float sink.
+            pq.write_table(
+                ot,
+                part,
+                compression="lz4",
+                use_byte_stream_split=[value_col],
+                row_group_size=len(ot),
+                use_dictionary=False,
+                write_statistics=False,
             )
-        # lz4 + byte-stream-split on the float payload: ~1.6x fewer
-        # bytes for ~15 ms/task of (parallel) CPU. The sink is
-        # disk-writeback-bound under sustained load (~600 MB/s device
-        # behind a multi-GB/s page cache), so fewer dirty bytes is
-        # wall-clock, not just space — and the right default for any
-        # production float sink.
-        pq.write_table(
-            ot,
-            part,
-            compression="lz4",
-            use_byte_stream_split=[value_col],
-            row_group_size=len(ot),
-            use_dictionary=False,
-            write_statistics=False,
-        )
-        t3 = _time.perf_counter()
+            t3 = _time.perf_counter()
+        ms = [int((b - a) * 1000) for a, b in ((t0, t1), (t1, t2), (t2, t3))]
         yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([part]),
-                pa.array([len(ot)], pa.int64()),
-                pa.array([int((t1 - t0) * 1000)], pa.int64()),
-                pa.array([int((t2 - t1) * 1000)], pa.int64()),
-                pa.array([int((t3 - t2) * 1000)], pa.int64()),
-            ],
+            [pa.array([part]), *(pa.array([v], pa.int64()) for v in [len(ot), *ms])],
             ["part", "rows", "read_ms", "kernel_ms", "write_ms"],
         )
 
-    manifest = sdf.mapInArrow(task, manifest_schema)
+    manifest = sdf.mapInArrow(
+        task, "part string, rows long, read_ms long, kernel_ms long, write_ms long"
+    )
     global LAST_MANIFEST
     LAST_MANIFEST = manifest.collect()  # run the job (commit point)
     if sink == "discard":
@@ -542,32 +472,3 @@ def write_wide_parquet(
                 row_group_size=len(gg),
             )
         w.close()
-
-
-def long_to_wide(
-    field: DataFrame,
-    extra_keys: Sequence[str] = (),
-    cell_col: str = "cell_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """(extra..., cell_id, value) long rows -> (extra..., values array)
-    wide rows, positionally indexed by cell_id. The field must be DENSE
-    (every cell present per extra combo) — the reference's N-D array
-    contract (xesmf/smm.py:77-86) carried over."""
-    extra = list(extra_keys)
-    pairs = F.array_sort(F.collect_list(F.struct(F.col(cell_col), F.col(value_col))))
-    return field.groupBy(*extra).agg(
-        F.transform(pairs, lambda x: x[value_col]).alias("values")
-    )
-
-
-def wide_to_long(
-    wide: DataFrame,
-    extra_keys: Sequence[str] = (),
-    value_col: str = "values",
-) -> DataFrame:
-    """(extra..., values array) -> (extra..., cell_id, value)."""
-    extra = list(extra_keys)
-    return wide.select(
-        *extra, F.posexplode(value_col).alias("cell_id", "value")
-    ).withColumn("cell_id", F.col("cell_id").cast("long"))
